@@ -26,9 +26,11 @@ import math
 from collections.abc import Sequence
 from typing import Any
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nimhdfstore_spark.operators import positional
 from nimhdfstore_spark.rowid import ROWID
 from nimhdfstore_spark.store import Store, StoreError, Table
 
@@ -56,6 +58,25 @@ def coord_cols(shape: Sequence[int]) -> list[Column]:
     ]
 
 
+def _checked(
+    shape: Sequence[int],
+    offset: Sequence[int],
+    count: Sequence[int],
+    stride: Sequence[int] | None,
+    block: Sequence[int] | None,
+) -> tuple[list[int], list[int]]:
+    """(stride, block) with their defaults of 1, after checking the
+    selection's rank and that no block exceeds its stride."""
+    k = len(shape)
+    stride = list(stride) if stride else [1] * k
+    block = list(block) if block else [1] * k
+    if not (len(offset) == len(count) == len(stride) == len(block) == k):
+        raise ValueError("hyperslab selection rank != dataset rank")
+    for st, b in zip(stride, block):
+        positional.check_block(st, b)
+    return stride, block
+
+
 def hyperslab_predicate(
     shape: Sequence[int],
     offset: Sequence[int],
@@ -67,19 +88,48 @@ def hyperslab_predicate(
     predicate: the conjunction over dimensions of the 1-D hyperslab condition
     applied to that dimension's coordinate (parseHyperslabSelection analog,
     nimhdf5/datasets.nim:1395-1419; stride/block default to 1)."""
-    k = len(shape)
-    stride = list(stride) if stride else [1] * k
-    block = list(block) if block else [1] * k
-    if not (len(offset) == len(count) == len(stride) == len(block) == k):
-        raise ValueError("hyperslab selection rank != dataset rank")
+    stride, block = _checked(shape, offset, count, stride, block)
     cond = F.lit(True)
     for d, s, o, c, st, b in zip(shape, _strides(shape), offset, count, stride, block):
-        if b > st:
-            raise ValueError("hyperslab block must be <= stride")
         i = F.expr(f"{ROWID} div {int(s)}") % F.lit(d)
         upper = o + (c - 1) * st + b
         cond = cond & (i >= o) & (i < upper) & (((i - o) % F.lit(st)) < b)
     return cond
+
+
+def hyperslab_mask(
+    r,
+    shape: Sequence[int],
+    offset: Sequence[int],
+    count: Sequence[int],
+    stride: Sequence[int],
+    block: Sequence[int],
+):
+    """numpy form of :func:`hyperslab_predicate` over an array of
+    ``_rowid`` values (the driver-local read path)."""
+    sel = True
+    for d, s, o, c, st, b in zip(shape, _strides(shape), offset, count, stride, block):
+        sel = sel & positional.hyperslab_mask((r // s) % d, o, c, st, b)
+    return sel
+
+
+def _hyperslab_span(
+    shape: Sequence[int],
+    offset: Sequence[int],
+    count: Sequence[int],
+    stride: Sequence[int],
+    block: Sequence[int],
+) -> list[tuple[int, int]]:
+    """The linear ``_rowid`` range holding every cell of an n-dim
+    hyperslab ([] when some dimension selects nothing): per dimension the
+    first and last selectable index, clamped to the extent."""
+    lo = hi = 0
+    for d, s, o, c, st, b in zip(shape, _strides(shape), offset, count, stride, block):
+        first, last = max(o, 0), min(o + (c - 1) * st + b - 1, d - 1)
+        if first > last:
+            return []
+        lo, hi = lo + first * s, hi + last * s
+    return [(lo, hi)]
 
 
 def _flatten(data: Any) -> tuple[list, list[int]]:
@@ -120,7 +170,8 @@ class Dataset:
 
     @property
     def dtype(self) -> str:
-        return dict(self.table.df().dtypes)[VALUE]
+        # the persisted catalog schema: plans nothing
+        return self.table.schema[VALUE].dataType.simpleString()
 
     def df(self) -> DataFrame:
         """(i0..ik, value) coordinate view."""
@@ -146,26 +197,60 @@ class Dataset:
         stride: Sequence[int] | None = None,
         block: Sequence[int] | None = None,
     ) -> DataFrame:
-        """P4 strided n-dim selection (datasets.nim:1601-1645) as a lazy
-        (coords, value) frame; the predicate is pure ``_rowid`` arithmetic,
-        so Parquet row-group pruning limits IO like HDF5 chunk intersection."""
-        pred = hyperslab_predicate(self.shape, offset, count, stride, block)
-        return (
-            self.table.df()
-            .where(pred)
-            .select(*coord_cols(self.shape), F.col(VALUE), F.col(ROWID))
-            .orderBy(ROWID)
+        """P4 strided n-dim selection (datasets.nim:1601-1645) as a
+        (coords, value) frame. The selection is pure ``_rowid`` arithmetic:
+        the catalog prunes files to its linear span, like HDF5 chunk
+        intersection, and the rows come back through the Table's read paths
+        (see ``_select``)."""
+        stride, block = _checked(self.shape, offset, count, stride, block)
+        spans = _hyperslab_span(self.shape, offset, count, stride, block)
+        n_max = math.prod(max(c, 0) * b for c, b in zip(count, block))
+        return self._select(
+            spans, n_max,
+            lambda r: hyperslab_mask(r, self.shape, offset, count, stride, block),
+            lambda: hyperslab_predicate(self.shape, offset, count, stride, block),
         )
 
     def elements(self, coords: Sequence[Sequence[int]]) -> DataFrame:
         """P5 explicit coordinate-set read (datasets.nim:806-860)."""
-        lin = [self._linear(c) for c in coords]
-        return (
-            self.table.df()
-            .where(F.col(ROWID).isin(lin))
-            .select(*coord_cols(self.shape), F.col(VALUE), F.col(ROWID))
-            .orderBy(ROWID)
+        lin = sorted({self._linear(c) for c in coords})
+        return self._select(
+            [(x, x) for x in lin], len(lin),
+            lambda r: np.isin(r, np.array(lin, dtype=np.int64)),
+            lambda: F.col(ROWID).isin(lin),
         )
+
+    def _select(self, spans, n_max: int, mask, pred) -> DataFrame:
+        """(coords, value) rows of a selection, sorted by ``_rowid``:
+        driver-local through ``Table._read_local`` when it fits, with the
+        coordinates computed in numpy; else a scan filtered by ``pred()``."""
+        got = self.table._read_local(spans, n_max, mask, columns=[VALUE])
+        if got is None:
+            return (
+                self.table._span_base(spans)
+                .where(pred())
+                .select(*coord_cols(self.shape), F.col(VALUE), F.col(ROWID))
+                .orderBy(ROWID)
+            )
+        import pyarrow as pa
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        tbl, schema = got
+        r = tbl.column(ROWID).to_numpy()
+        names = [f"i{j}" for j in range(len(self.shape))]
+        cols = [
+            pa.array((r // s) % d, pa.int64())
+            for d, s in zip(self.shape, _strides(self.shape))
+        ]
+        out = pa.Table.from_arrays(
+            [*cols, tbl.column(VALUE), tbl.column(ROWID)],
+            names=[*names, VALUE, ROWID],
+        )
+        schema = StructType(
+            [StructField(nm, LongType(), True) for nm in names]
+            + [schema[VALUE], schema[ROWID]]
+        )
+        return self.table.store.spark.createDataFrame(out, schema=schema)
 
     def __getitem__(self, key):
         """Per-dim int/slice indexing broadcast over dims (P6,

@@ -1140,14 +1140,17 @@ def connected_components(
 
             # LocalRelation, not createDataFrame(list): the latter is
             # Python-RDD-backed and schedules a Python-worker job every
-            # time the mapping is (re)read by the labeling join
-            mapping = local_frame(
-                pairs.sparkSession,
-                [(x, int(comp_min[find(x)])) for x in parent],
-                StructType(
-                    [StructField("id", id_type), StructField("comp", LongType())]
-                ),
+            # time the mapping is (re)read by the labeling join.
+            # local_frame refuses id types it cannot convert faithfully
+            # (timestamps) — those keep the classic conversion.
+            comp_rows = [(x, int(comp_min[find(x)])) for x in parent]
+            schema = StructType(
+                [StructField("id", id_type), StructField("comp", LongType())]
             )
+            try:
+                mapping = local_frame(pairs.sparkSession, comp_rows, schema)
+            except ValueError:
+                mapping = pairs.sparkSession.createDataFrame(comp_rows, schema)
             return nodes.select(F.col(id_col).alias("id")).join(
                 F.broadcast(mapping), "id", "left"
             ).select(

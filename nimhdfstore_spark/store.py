@@ -40,9 +40,10 @@ import shutil
 from collections.abc import Sequence
 from typing import Any
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from nimhdfstore_spark.operators import positional
 from nimhdfstore_spark.rowid import ROWID, with_rowid
@@ -155,6 +156,44 @@ def _logical_to_raw(
             out.append((ka + (lo - log_start), ka + (hi - log_start)))
         log_start += span
     return out
+
+
+def _raw_positions(dv, pos) -> np.ndarray:
+    """RAW file positions of the LOGICAL positions ``pos`` under the sorted,
+    disjoint deletion vector ``dv``: walking the ranges in order, a position
+    at or past a range's start moves past it. Strictly increasing, so sorted
+    disjoint logical spans map to sorted disjoint raw spans."""
+    raw = np.array(pos, dtype=np.int64)
+    for a, b in dv:
+        raw += np.where(raw >= a, b - a + 1, 0)
+    return raw
+
+
+def _dv_renumber(r: np.ndarray, dv) -> tuple[np.ndarray, np.ndarray]:
+    """numpy form of ``Table._dv_overlay`` over raw ``_rowid`` values:
+    (alive mask, logical position). A live row is shifted down by the total
+    length of the ranges before it."""
+    a = np.array([x[0] for x in dv], dtype=np.int64)
+    b = np.array([x[1] for x in dv], dtype=np.int64)
+    k = np.searchsorted(a, r, side="right")  # ranges starting at or before r
+    dead = (k > 0) & (r <= b[np.maximum(k - 1, 0)])
+    before = np.concatenate([[0], np.cumsum(b - a + 1)])
+    return ~dead, r - before[k]
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every level nullable — the schema Spark's Parquet reader
+    reports for a file, whatever nullability the writer declared."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
 
 
 def scan_rowid_ranges(
@@ -1912,8 +1951,13 @@ class Transaction:
 
 class Table:
     """Typed positional table handle (reference ``HDFTable[T]``,
-    nimtables.nim:20-28,111-131). Reads are lazy DataFrames; positional ops
-    compile to ``_rowid`` predicates (operators/positional.py)."""
+    nimtables.nim:20-28,111-131). Positional reads (``row``/``slice``/
+    ``hyperslab``/``elements``) take one of two paths over the catalog-pruned
+    files, with the selection semantics in ``operators/positional.py``: a
+    driver-sized read becomes a ready LocalRelation read from the immutable
+    snapshot at call time; anything larger (and blob or schema-less tables)
+    is a lazy scan with the ``_rowid`` predicate pushed down. ``df()`` and
+    the other reads are lazy DataFrames."""
 
     def __init__(
         self, store: Store, name: str, meta: dict, frozen: bool = False
@@ -2623,40 +2667,186 @@ class Table:
         return _qa.audit(parts)
 
     # -- positional reads (P1-P9) -------------------------------------------
+    #
+    # Two read paths share the catalog pruning of ``_kept_files``. A
+    # driver-sized selection — every kept file and the result within
+    # ``Store.LOCAL_REWRITE_MAX_ROWS``, no binary column, a stored schema —
+    # is read on the driver (``_read_local``) and returned as a ready
+    # LocalRelation. Anything larger plans a scan of the kept files with the
+    # ``_rowid`` predicate pushed down to Parquet (``_span_base``).
 
-    def _span_base(self, lo: int, hi: int) -> DataFrame:
-        """Raw rows for a LOGICAL position span [lo, hi]: catalog-pruned —
+    def _kept_files(
+        self, spans: Sequence[tuple[int, int]]
+    ) -> tuple[list[dict], list[dict]]:
+        """(catalog entries, the entries that can hold a position of one of
+        the inclusive LOGICAL ``spans``). A pending deletion vector maps the
+        span ends to raw file positions first, so pruning stays exact."""
+        entries = self._ranges()
+        spans = _merge_ranges([(a, b) for a, b in spans if a <= b])
+        if not spans or not entries:
+            return entries, []
+        dv = self._meta.get("dv") or []
+        lo = _raw_positions(dv, [a for a, _ in spans])
+        hi = _raw_positions(dv, [b for _, b in spans])
+        flo = np.array([e["lo"] for e in entries], dtype=np.int64)
+        fhi = np.array([e["hi"] for e in entries], dtype=np.int64)
+        j = np.searchsorted(hi, flo)  # first span ending at or after the file
+        hit = j < len(hi)
+        hit[hit] = lo[j[hit]] <= fhi[hit]
+        return entries, [e for e, h in zip(entries, hit) if h]
+
+    def _span_base(self, spans: Sequence[tuple[int, int]]) -> DataFrame:
+        """Raw rows for the LOGICAL position ``spans``: catalog-pruned —
         only files whose ``_rowid`` range can intersect are opened, so a
         point read on a 100k-file table costs one task, not 100k footer
         opens (the manifest-scale read path; round-8 verdict ask #3's
         planning measurement showed the whole-directory read at 0.6 ms/file
-        = 60 s per slice at 100k files). A pending deletion vector widens
-        the raw span by the total deleted count (raw position >= logical
-        position, conservative); the caller's logical predicate applies
-        after the overlay renumbers. Small catalogs keep the whole-dir
-        ``df()`` read — its analyzed plan is cached per snapshot."""
-        entries = self._ranges()
-        if len(entries) <= 8:
+        = 60 s per slice at 100k files). The caller's logical predicate
+        applies after the overlay renumbers. Small catalogs keep the
+        whole-dir ``df()`` read — its analyzed plan is cached per snapshot."""
+        entries, keep = self._kept_files(spans)
+        if len(entries) <= 8 or len(keep) == len(entries):
             return self.df()
-        raw_hi = hi + sum(e["rows"] for e in entries) - self.nrows
-        keep = [e for e in entries if not (e["hi"] < lo or e["lo"] > raw_hi)]
         if not keep:
             return self.df().where(F.lit(False))
-        if len(keep) == len(entries):
-            return self.df()
         return self._dv_overlay(self._read_files(keep))
 
+    def _read_local(
+        self,
+        spans: Sequence[tuple[int, int]],
+        n_max: int,
+        mask,
+        columns: Sequence[str] | None = None,
+    ):
+        """Driver-local read of a positional selection, or None when the
+        distributed path must serve it. ``spans`` are inclusive LOGICAL
+        ranges covering the selection, ``n_max`` bounds its row count and
+        ``mask`` maps an array of logical ``_rowid`` values to the selected
+        rows (the numpy forms in ``operators/positional.py``).
+
+        One pyarrow scan of the kept files, bounded by the spans' raw
+        ``_rowid`` ends (row-group pruning), then per batch: deletion-vector
+        renumbering, the exact selection, and finally a sort by ``_rowid``.
+        Returns ``(arrow table, schema)``. ``schema`` is the stored schema
+        made nullable — what Spark's Parquet reader reports, so both paths
+        type alike (an inferred schema would, e.g., turn ``timestamp_ntz``
+        into a shifted ``timestamp``). The scan reads every file as its
+        Arrow form, which also unifies files whose writers declared
+        different nullability (Spark's writer and the driver-direct one).
+        The rows are read at call time from the immutable snapshot this
+        handle points at."""
+        stored = self._stored_schema()
+        if stored is None:
+            return None
+        names = [ROWID, *columns] if columns else stored.names
+        if len(set(names)) < len(names) or any(
+            n not in stored.names for n in names
+        ):
+            return None  # the Spark plan keeps its own handling of these
+        fields = [stored[n] for n in names]
+        # blob bytes are not bounded by rows
+        if any("binary" in f.dataType.simpleString() for f in fields):
+            return None
+        n, cap = self.nrows, self.store.LOCAL_REWRITE_MAX_ROWS
+        spans = _merge_ranges([
+            (max(a, 0), min(b, n - 1)) for a, b in spans
+            if max(a, 0) <= min(b, n - 1)
+        ])
+        if min(n_max, sum(b - a + 1 for a, b in spans)) > cap:
+            return None
+        _, keep = self._kept_files(spans)
+        if any(e["rows"] > cap for e in keep):
+            return None
+        import pyarrow as pa
+        import pyarrow.dataset as pads
+        from pyspark.errors import PySparkException
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = StructType([
+            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in fields
+        ])
+        try:
+            arrow_schema = to_arrow_schema(schema)
+        except PySparkException:
+            return None  # a type the Arrow conversion does not cover
+        if not keep:
+            return arrow_schema.empty_table(), schema
+        dv = self._meta.get("dv") or []
+        raw_lo, raw_hi = (
+            int(x) for x in _raw_positions(dv, [spans[0][0], spans[-1][1]])
+        )
+        fmt = pads.ParquetFileFormat(
+            read_options=pads.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+        )
+        dset = pads.dataset(
+            [os.path.join(self.snapshot_path, e["name"]) for e in keep],
+            schema=arrow_schema, format=fmt,
+        )
+        r_col = pads.field(ROWID)
+        parts, ids = [], []
+        for batch in dset.to_batches(
+            columns=names, filter=(r_col >= raw_lo) & (r_col <= raw_hi)
+        ):
+            r = batch.column(ROWID).to_numpy()
+            if dv:
+                alive, r = _dv_renumber(r, dv)
+                sel = alive & mask(r)
+            else:
+                sel = mask(r)
+            if sel.any():
+                parts.append(batch.filter(pa.array(sel)))
+                ids.append(r[sel])
+        if not parts:
+            return arrow_schema.empty_table(), schema
+        tbl = pa.Table.from_batches(parts)
+        rid = np.concatenate(ids)
+        tbl = tbl.set_column(
+            names.index(ROWID), arrow_schema.field(ROWID), pa.array(rid)
+        )
+        if len(rid) > 1 and not np.all(rid[1:] > rid[:-1]):
+            tbl = tbl.take(np.argsort(rid, kind="stable"))
+        return tbl, schema
+
+    def _select(
+        self,
+        spans: Sequence[tuple[int, int]],
+        n_max: int,
+        mask,
+        pred,
+        columns: Sequence[str] | None = None,
+        order: bool = True,
+    ) -> DataFrame:
+        """A positional selection through whichever read path fits: the
+        driver-local LocalRelation, else ``_span_base`` filtered by the
+        Column predicate ``pred()`` (sorted by ``_rowid`` when ``order``).
+        ``pred`` is built only on the distributed path: a Column costs a
+        py4j round trip per node, tens of ms for a hyperslab."""
+        got = self._read_local(spans, n_max, mask, columns)
+        if got is not None:
+            tbl, schema = got
+            return self.store.spark.createDataFrame(tbl, schema=schema)
+        df = self._span_base(spans).where(pred())
+        if columns:
+            df = df.select(ROWID, *columns)
+        return df.orderBy(ROWID) if order else df
+
     def row(self, i: int) -> DataFrame:
-        ri = self._resolve(i)
-        return self._span_base(ri, ri).where(positional.point(i, self.nrows))
+        n, ri = self.nrows, self._resolve(i)
+        return self._select(
+            [(ri, ri)], 1,
+            lambda r: positional.point_mask(r, i, n),
+            lambda: positional.point(i, n), order=False,
+        )
 
     def slice(self, a: int, b: int) -> DataFrame:
         """Inclusive slice with negative-index support (table[a..b] /
         table[^k] semantics, nimtables.nim:154-171)."""
-        return (
-            self._span_base(self._resolve(a), self._resolve(b))
-            .where(positional.slice_range(a, b, self.nrows))
-            .orderBy(ROWID)
+        n, lo, hi = self.nrows, self._resolve(a), self._resolve(b)
+        return self._select(
+            [(lo, hi)], hi - lo + 1,
+            lambda r: positional.slice_mask(r, a, b, n),
+            lambda: positional.slice_range(a, b, n),
         )
 
     def __getitem__(self, key):
@@ -2692,23 +2882,22 @@ class Table:
         self, offset: int, count: int, stride: int = 1, block: int = 1,
         columns: Sequence[str] | None = None,
     ) -> DataFrame:
+        positional.check_block(stride, block)
         span_hi = offset + max(count - 1, 0) * stride + block - 1
-        df = self._span_base(offset, span_hi).where(
-            positional.hyperslab(offset, count, stride, block)
+        return self._select(
+            [(offset, span_hi)], max(count, 0) * block,
+            lambda r: positional.hyperslab_mask(r, offset, count, stride, block),
+            lambda: positional.hyperslab(offset, count, stride, block), columns,
         )
-        if columns:
-            df = df.select(ROWID, *columns)
-        return df.orderBy(ROWID)
 
     def elements(self, coords: Sequence[int]) -> DataFrame:
-        rs = [self._resolve(c) for c in coords]
-        base = (
-            self._span_base(min(rs), max(rs)) if rs
-            else self.df().where(F.lit(False))
+        n, coords = self.nrows, list(coords)
+        rs = sorted({self._resolve(int(c)) for c in coords})
+        return self._select(
+            [(r, r) for r in rs], len(rs),
+            lambda r: positional.element_mask(r, coords, n),
+            lambda: positional.element_set(coords, n),
         )
-        return base.where(
-            positional.element_set(coords, self.nrows)
-        ).orderBy(ROWID)
 
     def read_as(self, casts: dict[str, str]) -> DataFrame:
         return positional.read_as(self.df().orderBy(ROWID), casts)

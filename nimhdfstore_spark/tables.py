@@ -88,10 +88,11 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     on it schedules a real job through a Python worker (~0.3 s of fixed
     cost for a handful of rows — round-13 profile of the mutation payload
     path). Building through a pyarrow Table instead lands the rows in a
-    LocalRelation: ``isLocal()`` is True, ``collect()``/``toArrow()`` are
-    job-free, and the Store's payload gate (``_collect_payload``) and
-    driver-direct writer (``_write_local``) both take their zero-job
-    branches. Works regardless of the Arrow session conf; types follow
+    LocalRelation: ``isLocal()`` is True and ``collect()`` is job-free, so
+    the Store's payload gate (``_collect_payload``) schedules nothing.
+    ``toArrow()`` on a LocalRelation still runs one (small) job on Spark
+    4.1.2 — the cost the driver-direct writer (``_write_local``) pays for
+    such frames. Works regardless of the Arrow session conf; types follow
     ``to_arrow_schema`` exactly.
 
     Use for driver-built payloads of fixed-width/string/array-of-primitive
@@ -116,12 +117,18 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
 
     # Rows bind positionally; a Mapping row would silently zip over its
     # KEYS (field names written as values — a corrupt frame, not an error),
-    # so mappings pass through by name and sequences must match the schema
-    # width exactly (r13 ADVICE).
+    # so mappings bind by name and must name exactly the schema's fields
+    # (from_pylist would turn a misspelled key into a silent null column),
+    # and sequences must match the schema width exactly.
     from collections.abc import Mapping
 
     def _as_dict(r):
         if isinstance(r, Mapping):
+            if set(r) != set(schema.names):
+                raise ValueError(
+                    f"local_frame row keys {sorted(r)} differ from the "
+                    f"schema fields {sorted(schema.names)}"
+                )
             return dict(r)
         if len(r) != len(schema.names):
             raise ValueError(

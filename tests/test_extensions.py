@@ -128,6 +128,45 @@ def test_connected_components_long_chain_converges(spark):
     assert got == {i: 0 for i in range(n)}
 
 
+def test_connected_components_timestamp_ids_and_local_frame_fallback(
+    spark, monkeypatch
+):
+    import datetime as dt
+
+    from pyspark.sql.types import StructField, StructType, TimestampType
+
+    import nimhdfstore_spark.tables as T
+
+    # timestamp node ids: the components come out keyed by the timestamp,
+    # labelled with the cluster's min id (as epoch seconds)
+    ts = [dt.datetime(2024, 1, 1, 0, 0, i) for i in range(1, 7)]
+    nodes = spark.createDataFrame(
+        [(t,) for t in ts], StructType([StructField("id", TimestampType())])
+    )
+    pairs = spark.createDataFrame(
+        [(ts[0], ts[1]), (ts[1], ts[2]), (ts[3], ts[4])],
+        StructType([StructField("id_a", TimestampType()),
+                    StructField("id_b", TimestampType())]),
+    )
+    epoch = {r.id: r.s for r in nodes.selectExpr(
+        "id", "CAST(id AS BIGINT) AS s").collect()}
+    got = {r.id: r.comp for r in D.connected_components(pairs, nodes).collect()}
+    want_root = [ts[0], ts[0], ts[0], ts[3], ts[3], ts[5]]
+    assert got == {t: epoch[w] for t, w in zip(ts, want_root)}
+
+    # a mapping type local_frame refuses falls back to createDataFrame
+    def refuse(*a, **k):
+        raise ValueError("refused")
+
+    monkeypatch.setattr(T, "local_frame", refuse)
+    nodes = spark.createDataFrame([(i,) for i in range(1, 7)], "id long")
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 5)], "id_a long, id_b long"
+    )
+    got = {r.id: r.comp for r in D.connected_components(pairs, nodes).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
+
+
 def test_interval_join_semantics(spark):
     from nimhdfstore_spark.operators.interval import interval_join
 

@@ -20,6 +20,11 @@ def li_store(spark, sf_dir, tmp_path_factory):
     from nimhdfstore_spark.tables import load_pos
 
     store.put("lineitem", load_pos(spark, sf_dir, "lineitem"))
+    # The plan gates below pin the DISTRIBUTED read path (scan + pushed
+    # _rowid predicate). Driver-sized reads otherwise take the driver-local
+    # path, a bare LocalRelation with no scan; a zero bound sends every read
+    # on this store to the distributed path.
+    store.LOCAL_REWRITE_MAX_ROWS = 0
     return store
 
 
